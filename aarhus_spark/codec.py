@@ -482,21 +482,6 @@ def permute_poslists(flat_pos: np.ndarray, tfs: np.ndarray, order: np.ndarray) -
     return np.asarray(flat_pos, dtype=np.int64)[idx]
 
 
-def decode_all_blocks(payload: bytes | np.ndarray, offsets: list[int] | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode every block of a blocked run (given the block offsets)."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    ds, ts, ls = [], [], []
-    for off in offsets:
-        d, t, l = decode_block(buf, int(off))
-        ds.append(d)
-        ts.append(t)
-        ls.append(l)
-    if not ds:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy()
-    return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
-
-
 def concat_postings(payloads: list[bytes]) -> bytes:
     """k-way merge of posting runs with pairwise-disjoint, ordered docid
     ranges (the range-salted case, SURVEY §2.3 T7): decode, verify

@@ -227,7 +227,7 @@ def _bm25_oracle_sql(k: int = 10, by_url: bool = False,
     via the correlated mterms count) has to match while the queries
     text becomes the optional should clauses gated by
     min_should_match (a term in both clauses counts once, as must —
-    the max(kind) dedup mirrors operators/search._qterms_with_kinds)."""
+    the max(kind) dedup mirrors operators/search._QueryAnalysis.kinds_df)."""
     queries = queries if queries is not None else FLAGSHIP_QUERIES
     corpus = corpus_ctes if corpus_ctes is not None else _CORPUS_CTES_DUCK
     vals = ", ".join(f"({qid}, '{qt}')" for qid, qt in queries)
@@ -836,14 +836,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_JOIN_BROADCAST = """
-SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders,
-       round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
 def q_join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: large-large equi join (lineitem ⋈ orders) → SMJ/SHJ by Catalyst."""
     li = _t(spark, sf_dir, "lineitem")
@@ -855,15 +847,6 @@ def q_join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("revenue"),
              F.count("*").alias("n_lines"))
     )
-
-
-SQL_JOIN_SORTMERGE = """
-SELECT o_orderstatus,
-       round(CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE), 2) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderstatus
-"""
 
 
 def q_join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -988,48 +971,6 @@ FROM documents GROUP BY CUBE (lang, source)
 # ---------------------------------------------------------------------------
 # windows (W2, W3, W4, W5) and sorts/top-k (O2, O3)
 # ---------------------------------------------------------------------------
-
-def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2/O3: top-3 orders per customer by totalprice."""
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        _t(spark, sf_dir, "orders")
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 3)
-        .select("o_custkey", "rnk", "o_orderkey",
-                F.round("o_totalprice", 2).alias("price"))
-    )
-
-
-SQL_WINDOW_RANK = """
-SELECT o_custkey, rnk, o_orderkey, round(o_totalprice, 2) AS price
-FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-             CAST(row_number() OVER (PARTITION BY o_custkey
-                  ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rnk
-      FROM orders) z
-WHERE rnk <= 3
-"""
-
-
-def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: frame-spec running sum (posting-block byte-offset idiom)."""
-    w = (Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (
-        _t(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderkey",
-                F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"))
-    )
-
-
-SQL_WINDOW_RUNNING_SUM = """
-SELECT o_custkey, o_orderkey,
-       round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
-FROM orders
-"""
-
 
 def q_window_ntile_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4+W5 in one tagged result (driver-cap consolidation, round 4):

@@ -325,10 +325,6 @@ def q_text_token_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_regex", "n_ws", "fp_min", "fp_prefix")
 
 
-def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.language_id(_t(spark, sf_dir, "documents"))
-
-
 _STOPS = ", ".join(f"'{w}'" for w in TS.EN_STOPWORDS)
 
 SQL_TEXT_LANGID = f"""
@@ -346,10 +342,6 @@ FROM s
 """
 
 
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.quality_score(_t(spark, sf_dir, "documents"))
-
-
 SQL_TEXT_QUALITY = f"""
 WITH tk AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents),
 s AS (
@@ -365,10 +357,6 @@ FROM s WHERE n_tok > 0
 """
 
 
-def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.token_counts(_t(spark, sf_dir, "documents"))
-
-
 SQL_TEXT_TOKEN_COUNT = r"""
 SELECT doc_id,
        CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n_regex,
@@ -376,10 +364,6 @@ SELECT doc_id,
             ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n_ws
 FROM documents
 """
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.fingerprints(_t(spark, sf_dir, "documents"))
 
 
 SQL_TEXT_FINGERPRINT = f"""
@@ -625,10 +609,6 @@ def q_events_sliding_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sl.unionByName(se)
 
 
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return W.sliding_counts(_t(spark, sf_dir, "events"))
-
-
 SQL_EVENTS_SLIDING = """
 WITH ev AS (SELECT time_bucket(INTERVAL '15 minutes', ts) AS tb, event_type FROM events),
 wins AS (
@@ -639,10 +619,6 @@ SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
        CAST(count(*) AS BIGINT) AS n
 FROM wins GROUP BY 1, 2
 """
-
-
-def q_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return W.session_counts(_t(spark, sf_dir, "events"))
 
 
 SQL_EVENTS_SESSION = """

@@ -13,7 +13,7 @@ Q1→Q4 ``search_taat``  — distributed term-at-a-time. Segment rows for
   frozen contract (§1.3.4) no matter how Spark shuffles. Scales to any
   corpus: the shuffle is bounded by the postings of the query terms.
 
-Q1→Q5 ``search_wand`` — per-query block-max pruning. Each query's
+Q1→Q5 ``search_topk`` — per-query block-max pruning. Each query's
   term rows are gathered with ``applyInPandas`` and scored document-
   at-a-time over the block-max metadata: the docid space is cut into
   elementary intervals at block boundaries, each interval's upper
@@ -23,15 +23,20 @@ Q1→Q5 ``search_wand`` — per-query block-max pruning. Each query's
   never decoded (Broder'03 WAND / Ding & Suel'11 block-max, re-shaped
   interval-at-a-time so the inner loop is numpy, not per-doc Python).
   Exact top-k: stop condition is strict (<), ties keep flowing.
+  ``search_wand`` (one group per query) and ``search_wand_ranges``
+  (forced range count) are the same path with ``n_ranges`` pinned.
 
 Q7 ``brute_force_scorer_sql`` — the SQL-expressible twin used by the
   harness (DuckDB oracle): explode-tokenize → term stats → fold.
 
-``search_topk`` is the DEFAULT entry point: it sizes the chunk-parallel
-fan-out from the index stats (``default_n_ranges``) and routes to
-``search_wand_ranges`` — falling back to the single-group ``search_wand``
-only when one range suffices (small indexes), where the extra merge
-stage would be pure overhead.
+Every per-query kernel — WAND, phrase, phrase-prefix and the span ops
+(operators/spans.py) — runs through ONE fan-out, :func:`_fan_out`: the
+candidate segment rows of the query terms group per query, and above
+``default_n_ranges`` (sized from the index stats) each query's group
+splits into fixed docid ranges whose per-range top-k merge in one
+window — exact, since a doc lies in exactly one range. On a small
+index one range suffices and the plan is a single applyInPandas group
+per query with no merge stage.
 """
 
 from __future__ import annotations
@@ -44,9 +49,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StructType, _parse_datatype_string
 
 from ..codec import decode_block, decode_block_ext, decode_positions_at
 from ..config import FORMAT_VERSION, TOP_K
@@ -59,45 +66,53 @@ from .build import (IndexPaths, read_dictionary, read_fragments,
 RESULT_SCHEMA = "query_id long, rank int, docid long, score double"
 
 
-def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Small driver-side frame as an Arrow-backed LocalRelation.
+def local_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """Small driver-side frame (``rows``: tuples, or a pandas frame in
+    ``schema`` column order) as a job-free LocalRelation, built from a
+    ``pyarrow.Table`` typed by ``schema`` (a DDL string or StructType).
 
     ``createDataFrame(list)`` parallelizes the rows into an RDD of
     ``defaultParallelism`` slices, so EVERY materialization of the
     frame — a broadcast hash-relation build, a LocalTableScan feed, a
     ``collect`` — schedules a full task wave (~0.3 s for a 25-row
-    frame at local[32], measured r8). The pandas/Arrow path embeds the
-    rows in the logical plan as a LocalRelation instead: broadcast
-    builds and collects run driver-side, job-free (same pipeline
-    measured 0.55 → 0.26 s). Values are identical — the explicit DDL
-    ``schema`` drives the Arrow conversion exactly as it drove the
-    list path (oracle suite re-verified). ``schema`` must be a flat
-    comma-separated DDL (no struct/map fields — the column-name parse
-    splits on top-level commas only)."""
-    names = [f.strip().split()[0] for f in schema.split(",")]
-    return spark.createDataFrame(pd.DataFrame(list(rows), columns=names),
-                                 schema=schema)
+    frame at local[32], measured r8). An Arrow table embeds the rows in
+    the logical plan instead: broadcast builds and collects run
+    driver-side, job-free (same pipeline measured 0.55 → 0.26 s). The
+    table path does so whatever ``spark.sql.execution.arrow.pyspark
+    .enabled`` says, and it keeps ``None`` as NULL in every column
+    type — a pandas frame turns a missing double into NaN (so ``IS
+    NULL`` stops matching) and falls back to an RDD when Arrow
+    conversion is off."""
+    struct = (_parse_datatype_string(schema) if isinstance(schema, str)
+              else schema)
+    arrow = to_arrow_schema(struct)
+    if isinstance(rows, pd.DataFrame):
+        rows = rows.itertuples(index=False, name=None)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def localize_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     """Collect a (human-scale, by contract) queries frame ONCE and
-    re-embed it as an Arrow LocalRelation with the same schema.
+    re-embed it as a :func:`local_df` LocalRelation with the same schema.
 
     Ops that consume the frame more than once — rescore (primary pass
     + phrase pass), highlight/explain (top-k + term analysis),
     boosting (positive + negative match sets) — otherwise pay one full
     task wave PER consumer when handed an RDD-backed frame
     (``createDataFrame(list)``); localizing makes every later
-    analysis/collect job-free (see :func:`local_df`). Already-local
-    frames pass through untouched, so the common pandas-backed caller
-    pays nothing. Values and schema are identical either way."""
+    analysis/collect job-free. Already-local frames pass through
+    untouched, so the common pandas-backed caller pays nothing. Values
+    and schema are identical either way."""
     try:
         plan = queries._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() == "LocalRelation":
             return queries
     except Exception:  # pragma: no cover — introspection is best-effort
         pass
-    return spark.createDataFrame(queries.toPandas(), schema=queries.schema)
+    return local_df(spark, queries.collect(), queries.schema)
 
 
 def load_stats(index_dir: str) -> dict:
@@ -243,33 +258,6 @@ def analyze_queries(queries: DataFrame) -> DataFrame:
             yield ex
 
     return queries.mapInPandas(tok, schema="query_id long, term string")
-
-
-def analyze_neg_queries(queries: DataFrame) -> DataFrame | None:
-    """ES bool.must_not clause analysis: if the queries DataFrame
-    carries a nullable ``neg_qtext`` column, analyze it with the SAME
-    frozen tokenizer as the positive text and return distinct
-    (query_id, term) exclusion pairs; None when the column is absent
-    (the common no-bool case costs nothing)."""
-    if "neg_qtext" not in queries.columns:
-        return None
-    nq = (queries.filter(F.col("neg_qtext").isNotNull())
-          .select("query_id", F.col("neg_qtext").alias("qtext")))
-    return analyze_queries(nq)
-
-
-def analyze_must_queries(queries: DataFrame) -> DataFrame | None:
-    """ES bool.must clause analysis: a nullable ``must_qtext`` column
-    holds per-query REQUIRED terms — every analyzed must-term (OOV
-    included) has to match, while ``qtext`` becomes the optional
-    should-clause set (matched count ≥ min_should_match, default 0 when
-    a must clause is present — exactly ES's default). None when the
-    column is absent."""
-    if "must_qtext" not in queries.columns:
-        return None
-    mq = (queries.filter(F.col("must_qtext").isNotNull())
-          .select("query_id", F.col("must_qtext").alias("qtext")))
-    return analyze_queries(mq)
 
 
 def _check_bool_args(require_all: bool, min_should_match: int | None,
@@ -531,13 +519,16 @@ class _QueryAnalysis:
                       | set(self.must_terms))
 
     def qterms_df(self) -> DataFrame:
-        return self._spark.createDataFrame(self.qterms_pdf, QTERMS_SCHEMA)
+        return local_df(self._spark, self.qterms_pdf, QTERMS_SCHEMA)
 
     def kinds_df(self) -> DataFrame:
-        """The _qterms_with_kinds frame (kind 0=should/1=must/2=must_not,
-        max-deduped per (query, term)) as a LocalTableScan; plain qterms
-        when no bool clause exists — same contract as the DataFrame
-        version."""
+        """Should/must/must_not (query_id, term) pairs as one joinable
+        frame with a ``kind`` flag (0=should, 1=must, 2=must_not),
+        deduplicated per (query, term) by max(kind): a term in both
+        should and must counts (and scores) once as must; a term that
+        is also excluded keeps only the exclusion — a must+must_not
+        conflict then empties the query via the must count, exactly
+        ES. Plain qterms (no kind column) when no bool clause exists."""
         if self.neg_pdf is None and self.must_pdf is None:
             return self.qterms_df()
         frames = [self.qterms_pdf.assign(kind=0)]
@@ -548,14 +539,13 @@ class _QueryAnalysis:
         allp = pd.concat(frames, ignore_index=True)
         kinds = (allp.groupby(["query_id", "term"], as_index=False)["kind"]
                  .max())
-        return self._spark.createDataFrame(
-            kinds, QTERMS_SCHEMA + ", kind int")
+        return local_df(self._spark, kinds, QTERMS_SCHEMA + ", kind int")
 
     def qn_df(self) -> DataFrame:
         """|distinct analyzed terms| per query (the require_all target)."""
         qn = (self.qterms_pdf.groupby("query_id", as_index=False)
               .size().rename(columns={"size": "qn"}))
-        return self._spark.createDataFrame(qn, "query_id long, qn long")
+        return local_df(self._spark, qn, "query_id long, qn long")
 
     def qn_map(self) -> dict[int, int]:
         return {int(q): int(n) for q, n in
@@ -564,7 +554,7 @@ class _QueryAnalysis:
     def must_qn_df(self) -> DataFrame:
         qn = (self.must_pdf.groupby("query_id", as_index=False)
               .size().rename(columns={"size": "qn_must"}))
-        return self._spark.createDataFrame(qn, "query_id long, qn_must long")
+        return local_df(self._spark, qn, "query_id long, qn_must long")
 
     def must_term_map(self) -> dict[int, set] | None:
         if self.must_pdf is None:
@@ -615,16 +605,8 @@ def search_taat(
     min_should_match: int | None = None,
     score_mode: str = "bm25",
     return_matches: bool = False,
-    _candidate_docids: np.ndarray | None = None,
 ) -> DataFrame:
     """Distributed top-k. Returns (query_id, rank, docid, score).
-
-    ``_candidate_docids`` (internal — the multi_match pruned combiner):
-    a SORTED unique docid array; the decode pass drops every other
-    docid BEFORE the shuffle, so the fold/aggregation runs over
-    candidate rows only. Scores for surviving (query, doc) pairs are
-    bit-identical to the unrestricted run (the per-pair fold sees
-    exactly the same entries). bm25 score_mode only.
 
     ``return_matches=True`` (round 7) skips the final top-k window and
     returns the full scored match set (query_id, docid, score) — the
@@ -678,9 +660,6 @@ def search_taat(
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     _check_score_mode(score_mode)
     prox = score_mode == "proximity"
-    if _candidate_docids is not None and prox:
-        raise ValueError("_candidate_docids supports score_mode='bm25' only")
-    cand_arr = _candidate_docids
     qa = _QueryAnalysis(spark, queries)
     terms, neg_terms, must_terms = qa.terms, qa.neg_terms, qa.must_terms
     has_must = qa.must_pdf is not None
@@ -721,13 +700,6 @@ def search_taat(
                 docids = np.concatenate([p[0] for p in parts])
                 tfs = np.concatenate([p[1] for p in parts])
                 dls = np.concatenate([p[2] for p in parts])
-                if cand_arr is not None:
-                    # prune NON-candidates before the shuffle (a term's
-                    # docids are unique; cand_arr sorted unique)
-                    keep = np.isin(docids, cand_arr, assume_unique=True)
-                    if not keep.any():
-                        continue
-                    docids, tfs, dls = docids[keep], tfs[keep], dls[keep]
                 w = _idf(float(dfg[term]) if dfg is not None
                          else float(row_df), n_docs)
                 # exact: partial recomputed from (tf, dl) with the
@@ -840,7 +812,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                     score_mode: str = "bm25") -> pd.DataFrame:
     """When (range_lo, range_hi) restrict the docid space, only docs in
     that range are scored (blocks outside are never decoded) — the
-    chunk-parallel mode of :func:`search_wand_ranges`. Exact within the
+    chunk-parallel mode of :func:`_fan_out`. Exact within the
     range: a doc's full term set is present in any group that contains
     rows overlapping its docid.
 
@@ -1163,105 +1135,100 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     })
 
 
-def _mq_term_map(mq: DataFrame | None) -> dict[int, set] | None:
-    """Per-query analyzed must-term sets (driver-side, tiny — same
-    cardinality class as the query term lists already collected);
-    None when there is no must clause at all."""
-    if mq is None:
-        return None
-    out: dict[int, set] = {}
-    for r in mq.collect():
-        out.setdefault(int(r["query_id"]), set()).add(r["term"])
-    return out
-
-
-def _qn_map(qterms: DataFrame) -> dict[int, int]:
-    """|distinct analyzed terms| per query — the conjunctive target
-    count (OOV terms included, so a must-clause on a missing term
-    empties the result, exactly ES bool.must)."""
-    rows = qterms.groupBy("query_id").agg(F.count("*").alias("qn")).collect()
-    return {int(r["query_id"]): int(r["qn"]) for r in rows}
-
-
-def _qterms_with_kinds(qterms: DataFrame, nq: DataFrame | None,
-                       mq: DataFrame | None) -> DataFrame:
-    """Union should/must/must_not (query_id, term) pairs into one
-    joinable frame with a ``kind`` flag (0=should, 1=must, 2=must_not),
-    deduplicated per (query, term) by max(kind): a term in both should
-    and must counts (and scores) once as must; a term that is also
-    excluded keeps only the exclusion — a must+must_not conflict then
-    empties the query via the must count, exactly ES. Returns qterms
-    unchanged (no kind column) when there are no bool clauses."""
-    if nq is None and mq is None:
-        return qterms
-    out = qterms.withColumn("kind", F.lit(0))
-    if mq is not None:
-        out = out.unionByName(mq.withColumn("kind", F.lit(1)))
-    if nq is not None:
-        out = out.unionByName(nq.withColumn("kind", F.lit(2)))
-    return out.groupBy("query_id", "term").agg(F.max("kind").alias("kind"))
-
-
-def search_wand(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOP_K,
-    require_all: bool = False,
-    min_should_match: int | None = None,
-    score_mode: str = "bm25",
-) -> DataFrame:
-    """Per-query exact top-k with block-max pruning; one applyInPandas
-    group per query (ES-style shard fan-in happens inside the group —
-    the gathered rows are already per-term encoded bytes, tiny relative
-    to the corpus). ``require_all=True`` = conjunctive bool.must with
-    mandatory-term interval skipping (see _wand_one_query) — the scale
-    path for conjunctive queries; bit-identical to
-    ``search_taat(require_all=True)`` (asserted in tests).
-    ``min_should_match``, a ``neg_qtext`` column (bool.must_not), and a
-    ``must_qtext`` column (mixed bool.must + optional should clauses)
-    carry the remaining ES bool semantics — see search_taat; all three
-    paths are bit-identical (asserted in tests).
-    ``score_mode="proximity"``: opt-in position-window score weighting
-    (contract in :func:`_wand_one_query`)."""
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
-    _check_score_mode(score_mode)
-    qa = _QueryAnalysis(spark, queries)
-    terms, must_terms = qa.terms, qa.must_terms
-    must_by_q = qa.must_term_map()
-    _check_bool_args(require_all, min_should_match,
-                     has_must=must_by_q is not None)
-    if not terms and not must_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    qterms_j = qa.kinds_df()
-    all_terms = qa.all_terms
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
-    qn = qa.qn_map() if require_all else None
-
-    seg_q = seg.join(F.broadcast(qterms_j), "term")
-
-    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        if must_by_q is not None:
-            mt = frozenset(must_by_q.get(int(key[0]), ()))
-            return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                                   min_match=min_should_match,
-                                   must_terms=mt, n_must=len(mt), dead=dead,
-                                   score_mode=score_mode)
-        mm = qn[int(key[0])] if qn is not None else min_should_match
-        return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                               min_match=mm, dead=dead,
-                               score_mode=score_mode)
-
-    return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-
-def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
+def default_n_ranges(n_docs: int) -> int:
     """Size the chunk-parallel fan-out from corpus stats: ~4M docs per
     range keeps a range's decoded slice of a head posting list (≤ range
     width postings/term) comfortably inside one task's memory at any
     corpus size, capped at 512 groups per query."""
-    return max(1, min(512, -(-n_docs // target_docs_per_range)))
+    return max(1, min(512, -(-n_docs // (1 << 22))))
+
+
+def _query_terms(spark: SparkSession,
+                 terms_by_query: dict) -> tuple[DataFrame, list[str]]:
+    """(per-query distinct (query_id, term) frame, sorted term union)
+    for a ``query_id -> terms`` map — the :func:`_fan_out` inputs of
+    every kernel without bool clauses."""
+    pairs = [(qid, t) for qid, ts in terms_by_query.items()
+             for t in sorted(set(ts))]
+    return local_df(spark, pairs, QTERMS_SCHEMA), sorted({t for _, t in pairs})
+
+
+def _fan_out(spark: SparkSession, index_dir, qterms: DataFrame,
+             terms: list[str], kernel_for, k: int,
+             n_ranges: int | None) -> DataFrame:
+    """The per-query fan-out every retrieval kernel runs through (WAND,
+    phrase, phrase-prefix, spans). Returns (query_id, rank, docid, score).
+
+    ``qterms`` holds each query's (query_id, term[, kind]) rows and
+    ``terms`` their union. The candidate segment rows of ``terms``
+    (term-IN parquet pushdown) join ``qterms`` and group per query;
+    ``kernel_for(n_docs, avgdl, dfg, dead)`` — called once with the
+    chain's tombstone-adjusted stats, the global-df map (None: rows
+    carry it) and the dead docids — returns the kernel ``(g, query_id,
+    lo, hi) -> RESULT_SCHEMA rows`` that scores one group restricted to
+    docids in [lo, hi] (``hi`` None = unbounded).
+
+    ``n_ranges`` (default :func:`default_n_ranges` of the adjusted N)
+    picks the plan. One range: a single applyInPandas group per query,
+    no merge. More: the docid domain is cut into ``n_ranges`` fixed
+    ranges, each (query, range) pair is its own group — a head term's
+    chunk rows scatter across groups, so no task ever holds a full head
+    posting list — and one window merges the ≤ n_ranges·k candidates
+    per query. Exact: every doc lies in exactly one range, and every
+    row whose docid span covers it joins that range's group."""
+    from pyspark.sql.window import Window
+
+    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    if not terms:
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+    seg = candidate_segments(spark, index_dir, terms)
+    kernel = kernel_for(n_docs, avgdl,
+                        _dfg_or_none(spark, index_dir, terms, seg=seg,
+                                     dead=dead), dead)
+    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
+    if nr <= 1:
+        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
+            return kernel(g, int(key[0]), 0, None)
+
+        return (seg.join(F.broadcast(qterms), "term")
+                .groupBy("query_id").applyInPandas(run, RESULT_SCHEMA))
+
+    # range bounds from the ACTUAL docid domain (per-dir docid_offset +
+    # N), not [0, n_docs): a delta index queried alone has all docids
+    # ≥ its offset, which [0, n_docs) would silently miss entirely
+    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
+    if dom_hi < dom_lo:
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
+    ranges = local_df(
+        spark,
+        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
+         for r in range(nr)],
+        "rng int, lo long, hi long")
+    # a row joins exactly the ranges its TRUE docid span
+    # [first_docid, __max_docid] intersects — both bounds are needed:
+    # without the low side, a tail term whose postings sit late in the
+    # docid space is copied into every earlier range's group (~n_ranges/2
+    # replication, ×512 at the fan-out cap) and decodes nothing there.
+    # Exactness never depends on this pruning, only task size does: any
+    # row holding a posting for a doc in [lo, hi] spans that doc's docid
+    # and therefore joins the range.
+    seg_r = (seg.withColumn("__max_docid",
+                            F.element_at("blocks", -1)["last_docid"])
+             .join(F.broadcast(qterms), "term")
+             .join(F.broadcast(ranges),
+                   (F.col("__max_docid") >= F.col("lo"))
+                   & (F.col("first_docid") <= F.col("hi"))))
+
+    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
+        return kernel(g, int(key[0]), int(g["lo"].iloc[0]),
+                      int(g["hi"].iloc[0]))
+
+    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
+    return (cands.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "docid", "score"))
 
 
 def search_topk(
@@ -1274,136 +1241,66 @@ def search_topk(
     min_should_match: int | None = None,
     score_mode: str = "bm25",
 ) -> DataFrame:
-    """THE default query path. Derives the chunk-parallel fan-out from
-    the index stats and dispatches: one range → single-group WAND (small
-    index fast path, no merge stage); otherwise chunk-parallel WAND over
-    docid ranges (no task ever holds a full head posting list).
-    ``require_all=True`` routes conjunctive (ES bool.must) semantics
-    through the same WAND paths; ``min_should_match`` and a
-    ``neg_qtext`` queries column (bool.must_not) complete the ES bool
-    query surface (see search_taat)."""
-    n_docs, _, _ = load_stats_multi(_as_dirs(index_dir))
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        return search_wand(spark, index_dir, queries, k=k, require_all=require_all,
-                           min_should_match=min_should_match,
-                           score_mode=score_mode)
-    return search_wand_ranges(spark, index_dir, queries, k=k, n_ranges=nr,
-                              require_all=require_all,
-                              min_should_match=min_should_match,
-                              score_mode=score_mode)
-
-
-def search_wand_ranges(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOP_K,
-    n_ranges: int = 8,
-    require_all: bool = False,
-    min_should_match: int | None = None,
-    score_mode: str = "bm25",
-) -> DataFrame:
-    """Chunk-parallel exact WAND — the 10^12-scale query path.
-
-    The docid space is cut into ``n_ranges`` fixed global ranges; each
-    (query, range) pair is an independent applyInPandas group running
-    range-restricted block-max WAND (a head term's chunk rows scatter
-    across groups, so no single task ever holds a full head posting
-    list), then per-range candidates are merged with the Q6 window
-    (candidates ≤ n_ranges·k per query). Exact: every doc's docid lies
-    in exactly one range and all its term rows whose docid span covers
-    it are present in that range's group.
-    """
-    from pyspark.sql.window import Window
-
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    """THE default query path: per-query exact top-k with block-max
+    WAND (:func:`_wand_one_query`) over the :func:`_fan_out` — one
+    group per query on a small index, chunk-parallel docid ranges above
+    the fan-out threshold (``n_ranges`` forces the range count).
+    ``require_all=True`` = conjunctive bool.must with mandatory-term
+    interval skipping — the scale path for conjunctive queries.
+    ``min_should_match``, a ``neg_qtext`` column (bool.must_not), and a
+    ``must_qtext`` column (mixed bool.must + optional should clauses)
+    carry the remaining ES bool semantics — see search_taat; all
+    paths are bit-identical (asserted in tests).
+    ``score_mode="proximity"``: opt-in position-window score weighting
+    (contract in :func:`_wand_one_query`)."""
     _check_score_mode(score_mode)
     qa = _QueryAnalysis(spark, queries)
-    terms, must_terms = qa.terms, qa.must_terms
     must_by_q = qa.must_term_map()
     _check_bool_args(require_all, min_should_match,
                      has_must=must_by_q is not None)
-    if not terms and not must_terms:
+    if not qa.terms and not qa.must_terms:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    qterms_j = qa.kinds_df()
-    all_terms = qa.all_terms
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
     qn = qa.qn_map() if require_all else None
-    seg = seg.withColumn("__max_docid", F.element_at("blocks", -1)["last_docid"])
-    seg_q = seg.join(F.broadcast(qterms_j), "term")
 
-    # range bounds from the ACTUAL docid domain (per-dir docid_offset +
-    # N), not [0, n_docs): a delta index queried alone has all docids
-    # ≥ its offset, which [0, n_docs) would silently miss entirely
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(n_ranges)],
-        "rng int, lo long, hi long")
-    # a row joins exactly the ranges its TRUE docid span
-    # [first_docid, __max_docid] intersects — both bounds are needed:
-    # without the low side, a tail term whose postings sit late in the
-    # docid space is copied into every earlier range's group (~n_ranges/2
-    # replication, ×512 at the fan-out cap) and decodes nothing there.
-    # Exactness never depends on this pruning, only task size does: any
-    # row holding a posting for a doc in [lo, hi] spans that doc's docid
-    # and therefore joins the range.
-    seg_r = seg_q.join(F.broadcast(ranges),
-                       (F.col("__max_docid") >= F.col("lo"))
-                       & (F.col("first_docid") <= F.col("hi")))
+    def kernel_for(n_docs, avgdl, dfg, dead):
+        def kernel(g, qid, lo, hi):
+            # with a must clause require_all is off (_check_bool_args),
+            # so min_should_match gates the should terms alone
+            mt = (frozenset(must_by_q.get(qid, ()))
+                  if must_by_q is not None else None)
+            return _wand_one_query(
+                g, n_docs, avgdl, k, dfg, range_lo=lo, range_hi=hi,
+                min_match=qn[qid] if qn is not None else min_should_match,
+                must_terms=mt, n_must=len(mt or ()), dead=dead,
+                score_mode=score_mode)
+        return kernel
 
-    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        if must_by_q is not None:
-            mt = frozenset(must_by_q.get(int(key[0]), ()))
-            return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                                   range_lo=int(g["lo"].iloc[0]),
-                                   range_hi=int(g["hi"].iloc[0]),
-                                   min_match=min_should_match,
-                                   must_terms=mt, n_must=len(mt), dead=dead,
-                                   score_mode=score_mode)
-        mm = qn[int(key[0])] if qn is not None else min_should_match
-        return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                               range_lo=int(g["lo"].iloc[0]),
-                               range_hi=int(g["hi"].iloc[0]),
-                               min_match=mm, dead=dead,
-                               score_mode=score_mode)
+    return _fan_out(spark, index_dir, qa.kinds_df(), qa.all_terms,
+                    kernel_for, k, n_ranges)
 
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+
+def search_wand(spark: SparkSession, index_dir: str, queries: DataFrame,
+                k: int = TOP_K, require_all: bool = False,
+                min_should_match: int | None = None,
+                score_mode: str = "bm25") -> DataFrame:
+    """:func:`search_topk` with one applyInPandas group per query."""
+    return search_topk(spark, index_dir, queries, k, 1, require_all,
+                       min_should_match, score_mode)
+
+
+def search_wand_ranges(spark: SparkSession, index_dir: str,
+                       queries: DataFrame, k: int = TOP_K, n_ranges: int = 8,
+                       require_all: bool = False,
+                       min_should_match: int | None = None,
+                       score_mode: str = "bm25") -> DataFrame:
+    """:func:`search_topk` over exactly ``n_ranges`` docid ranges."""
+    return search_topk(spark, index_dir, queries, k, n_ranges, require_all,
+                       min_should_match, score_mode)
 
 
 # ---------------------------------------------------------------------------
 # Q8: phrase queries over positional postings (format v4)
 # ---------------------------------------------------------------------------
-
-def analyze_phrase_queries(queries: DataFrame) -> DataFrame:
-    """(query_id, qtext) -> (query_id, qpos, term) — ORDERED and
-    duplicate-keeping, unlike :func:`analyze_queries`: the phrase
-    "the data the" is three constraints at offsets 0, 1, 2."""
-
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ex = pd.DataFrame({"query_id": pdf["query_id"],
-                               "term": tokenize_series(pdf["qtext"])})
-            ex = ex.explode("term", ignore_index=True).dropna(subset=["term"])
-            if len(ex) == 0:
-                continue
-            ex["qpos"] = ex.groupby("query_id", sort=False).cumcount().astype(np.int32)
-            yield ex[["query_id", "qpos", "term"]]
-
-    return queries.mapInPandas(tok, schema="query_id long, qpos int, term string")
-
 
 def _sloppy_match(phrase: list[tuple[int, str]],
                   per_term: dict[str, tuple], inter: np.ndarray,
@@ -1796,18 +1693,12 @@ def search_phrase(
     """Phrase top-k (ES match_phrase parity, incl. ``slop`` proximity —
     semantics in :func:`_phrase_one_query`; ``score_mode="proximity"``
     additionally weights scores by 1/(1+min window width), closest
-    match first) over the positional index.
-    Dispatches like :func:`search_topk`: small index -> one
-    applyInPandas group per query; large -> chunk-parallel groups over
-    fixed docid ranges (exact: a doc's anchors/windows are evaluated
-    entirely inside the one range that contains its docid, and every
-    term row whose span covers that docid joins the range)."""
-    from pyspark.sql.window import Window
-
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
-    # per-query (qpos, term) structure, driver-side (tiny): the same
-    # frozen tokenizer as analyze_phrase_queries, ordered and
-    # duplicate-keeping, without the mapInPandas+collect job
+    match first) over the positional index, through :func:`_fan_out`
+    (exact per range: a doc's anchors/windows are evaluated entirely
+    inside the one range that contains its docid)."""
+    # per-query (qpos, term) structure, driver-side (tiny): the frozen
+    # tokenizer, ordered and duplicate-keeping — the phrase "the data
+    # the" is three constraints at offsets 0, 1, 2
     qp = queries.select("query_id", "qtext").toPandas()
     phrases: dict[int, list[tuple[int, str]]] = {}
     for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):
@@ -1818,52 +1709,15 @@ def search_phrase(
             lst = phrases.setdefault(int(qid_), [])
             base = len(lst)
             lst.extend((base + i, t) for i, t in enumerate(toks))
-    terms = sorted({t for p in phrases.values() for _, t in p})
-    if not terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, terms)
-    dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
-    qdist = local_df(
-        spark,
-        [(qid, t) for qid, p in phrases.items() for t in {t for _, t in p}],
-        "query_id long, term string")
+    qterms, terms = _query_terms(
+        spark, {qid: [t for _, t in p] for qid, p in phrases.items()})
 
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        seg_q = seg.join(F.broadcast(qdist), "term")
+    def kernel_for(n_docs, avgdl, dfg, dead):
+        return lambda g, qid, lo, hi: _phrase_one_query(
+            g, phrases[qid], n_docs, avgdl, k, dfg, lo, hi, dead,
+            slop=slop, score_mode=score_mode)
 
-        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-            return _phrase_one_query(g, phrases[int(key[0])], n_docs, avgdl,
-                                     k, dfg, dead=dead, slop=slop,
-                                     score_mode=score_mode)
-
-        return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1) for r in range(nr)],
-        "rng int, lo long, hi long")
-    seg2 = seg.withColumn("__max_docid", F.element_at("blocks", -1)["last_docid"])
-    seg_r = (seg2.join(F.broadcast(qdist), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-
-    def run_rng(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        return _phrase_one_query(g, phrases[int(key[0])], n_docs, avgdl, k, dfg,
-                                 range_lo=int(g["lo"].iloc[0]),
-                                 range_hi=int(g["hi"].iloc[0]), dead=dead,
-                                 slop=slop, score_mode=score_mode)
-
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run_rng, RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _fan_out(spark, index_dir, qterms, terms, kernel_for, k, n_ranges)
 
 
 # ---------------------------------------------------------------------------
@@ -2014,9 +1868,9 @@ def _phrase_prefix_one_query(g: pd.DataFrame, fixed: list[str],
     term does not double-count), the exactly-SQL-expressible analog of
     Lucene's MultiPhraseQuery scoring.
 
-    Same two-pass structure as :func:`_phrase_one_query`: pass 1
-    decodes only the scoring streams and intersects docids; pass 2
-    pays for position bytes only in blocks still holding candidates.
+    Same two-pass decode as :func:`_phrase_one_query`: candidates are
+    docs holding every fixed term and SOME expansion (one any_of group),
+    and position bytes decode only in blocks still holding candidates.
     """
     from ..scoring import partial as _partial
 
@@ -2024,105 +1878,28 @@ def _phrase_prefix_one_query(g: pd.DataFrame, fixed: list[str],
                           "rank": pd.Series([], dtype="int32"),
                           "docid": pd.Series([], dtype="int64"),
                           "score": pd.Series([], dtype="float64")})
-    if range_hi is None:
-        range_hi = np.iinfo(np.int64).max
     dfg = _dfg_from_rows(g, dfg)
     qid = int(g["query_id"].iloc[0])
     fixed_terms = sorted(set(fixed))
-    term_rows: dict[str, list[tuple]] = {}
-    for row in zip(g["term"], g["chunk"], g["first_docid"], g["blocks"],
-                   g["postings"]):
-        term_rows.setdefault(row[0], []).append(row)
-    if any(t not in term_rows for t in fixed_terms):
-        return empty  # a required fixed term has no postings here
-    exp_here = [e for e in expansions if e in term_rows]
-    if not exp_here:
-        return empty  # no expansion has postings -> nothing completes
-
-    # PASS 1 — scoring streams only
-    per_term_blocks: dict[str, list[tuple]] = {}
-    for t in fixed_terms + [e for e in exp_here if e not in fixed_terms]:
-        blocks = []
-        for (_t, chunk, first, blks, payload) in sorted(
-                term_rows[t], key=lambda r: (int(r[2]), int(r[1]))):
-            buf = np.frombuffer(payload, dtype=np.uint8)
-            prev_last = int(first) - 1
-            for bi, b in enumerate(blks):
-                last = int(b["last_docid"])
-                if last >= range_lo and prev_last + 1 <= range_hi:
-                    d, tf, dl, pos_off = decode_block_ext(buf, int(b["offset"]))
-                    sel = (d >= range_lo) & (d <= range_hi)
-                    if sel.any():
-                        blk_end = (int(blks[bi + 1]["offset"])
-                                   if bi + 1 < len(blks) else buf.size)
-                        blocks.append((d[sel], tf[sel], dl[sel], buf,
-                                       pos_off, sel, tf, blk_end))
-                prev_last = last
-        if blocks:
-            per_term_blocks[t] = blocks
-        elif t in fixed_terms:
-            return empty
-
-    inter = None
-    for t in fixed_terms:
-        td = np.concatenate([b[0] for b in per_term_blocks[t]])
-        inter = td if inter is None else np.intersect1d(inter, td,
-                                                        assume_unique=True)
-        if inter.size == 0:
-            return empty
-    exp_union_l = [np.concatenate([b[0] for b in per_term_blocks[e]])
-                   for e in exp_here if e in per_term_blocks]
-    if not exp_union_l:
-        return empty
-    exp_union = np.unique(np.concatenate(exp_union_l))
-    inter = exp_union if inter is None else np.intersect1d(
-        inter, exp_union, assume_unique=True)
-    if dead is not None and dead.size:
-        inter = inter[~np.isin(inter, dead)]
+    inter, per_term = _decode_candidate_positions(
+        g, fixed_terms + [e for e in expansions if e not in fixed_terms],
+        range_lo, range_hi, dead,
+        required_groups=[[t] for t in fixed_terms] + [list(expansions)])
     if inter.size == 0:
         return empty
 
-    # PASS 2 — positions only for blocks still holding candidates
-    per_term: dict[str, tuple] = {}
-    for t, blocks in per_term_blocks.items():
-        ds, tfl, dll, pfl = [], [], [], []
-        for (d, tf, dl, buf, pos_off, sel, tf_full, blk_end) in blocks:
-            keep = np.isin(d, inter, assume_unique=True)
-            if not keep.any():
-                continue
-            pos = decode_positions_at(buf, pos_off, tf_full, end=blk_end)
-            pos = pos[np.repeat(sel, tf_full)]
-            ds.append(d[keep]); tfl.append(tf[keep]); dll.append(dl[keep])
-            pfl.append(pos[np.repeat(keep, tf)])
-        if ds:
-            per_term[t] = (np.concatenate(ds), np.concatenate(tfl),
-                           np.concatenate(dll), np.concatenate(pfl))
-    if any(t not in per_term for t in fixed_terms):
-        return empty
-
     # anchors over the FIXED constraints (offsets 0..n_fixed-1), exactly
-    # the exact-phrase anchor intersection
-    anchors: np.ndarray | None = None
-    for o, t in enumerate(fixed):
-        d, tf, _dl, pos = per_term[t]
-        docc = np.repeat(d, tf)
-        keep = pos >= o
-        if not keep.any():
-            return empty
-        local = np.searchsorted(inter, docc[keep]).astype(np.int64)
-        key = (local << np.int64(32)) | (pos[keep].astype(np.int64) - o)
-        key = np.unique(key)
-        anchors = key if anchors is None else np.intersect1d(
-            anchors, key, assume_unique=True)
-        if anchors.size == 0:
-            return empty
+    # the exact-phrase anchor intersection (None: no fixed term)
+    anchors = _exact_anchor_keys(list(enumerate(fixed)), per_term, inter)
+    if anchors is not None and anchors.size == 0:
+        return empty
 
     # the trailing slot: an anchor completes iff SOME expansion sits at
     # offset len(fixed); collect (doc, expansion) pairs for scoring
     o_last = len(fixed)
     matched_local: np.ndarray | None = None
     docs_by_exp: dict[str, np.ndarray] = {}
-    for e in exp_here:
+    for e in expansions:
         if e not in per_term:
             continue
         d, tf, _dl, pos = per_term[e]
@@ -2182,13 +1959,9 @@ def search_phrase_prefix(
     term dictionary (range-pushdown scan, df-desc cap ``max_expansions``
     — ES default 50) and a doc matches iff the exact sequence
     ``fixed + [e]`` occurs for some expansion e. Ranking contract in
-    :func:`_phrase_prefix_one_query`. Dispatches like
-    :func:`search_phrase`: single applyInPandas group per query on a
-    small index, chunk-parallel docid ranges on a large one (exact —
-    a doc's anchors are evaluated inside its one range)."""
-    from pyspark.sql.window import Window
-
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    :func:`_phrase_prefix_one_query`. Runs through :func:`_fan_out`
+    (exact per range — a doc's anchors are evaluated inside its one
+    range)."""
     qp = queries.select("query_id", "qtext").toPandas()
     phrases: dict[int, list[str]] = {}
     for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):
@@ -2203,60 +1976,14 @@ def search_phrase_prefix(
         plans[qid] = (fixed,
                       expand_prefix_terms(spark, index_dir, prefix,
                                           cap=max_expansions))
-    all_terms = sorted({t for fixed, exps in plans.values()
-                        for t in (*fixed, *exps)})
-    if not all_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
-    qdist = local_df(
-        spark,
-        [(qid, t) for qid, (fixed, exps) in plans.items()
-         for t in sorted(set(fixed) | set(exps))],
-        "query_id long, term string")
+    qterms, terms = _query_terms(
+        spark, {qid: [*fixed, *exps] for qid, (fixed, exps) in plans.items()})
 
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        seg_q = seg.join(F.broadcast(qdist), "term")
+    def kernel_for(n_docs, avgdl, dfg, dead):
+        return lambda g, qid, lo, hi: _phrase_prefix_one_query(
+            g, *plans[qid], n_docs, avgdl, k, dfg, lo, hi, dead)
 
-        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-            fixed, exps = plans[int(key[0])]
-            return _phrase_prefix_one_query(g, fixed, exps, n_docs, avgdl,
-                                            k, dfg, dead=dead)
-
-        return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(nr)],
-        "rng int, lo long, hi long")
-    seg2 = seg.withColumn("__max_docid",
-                          F.element_at("blocks", -1)["last_docid"])
-    seg_r = (seg2.join(F.broadcast(qdist), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-
-    def run_rng(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        fixed, exps = plans[int(key[0])]
-        return _phrase_prefix_one_query(g, fixed, exps, n_docs, avgdl, k,
-                                        dfg,
-                                        range_lo=int(g["lo"].iloc[0]),
-                                        range_hi=int(g["hi"].iloc[0]),
-                                        dead=dead)
-
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run_rng,
-                                                           RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _fan_out(spark, index_dir, qterms, terms, kernel_for, k, n_ranges)
 
 
 # ---------------------------------------------------------------------------

@@ -43,9 +43,10 @@ def main() -> None:
                                        "span-near", "span-not",
                                        "span-first", "match-bool-prefix"],
                     default="wand",
-                    help="wand = default dispatcher (chunk-parallel, fan-out "
-                         "auto-sized from index stats); wand-ranges forces the "
-                         "chunk-parallel path; wand-single forces one group/query; "
+                    help="wand = block-max WAND with the docid-range fan-out "
+                         "auto-sized from index stats; wand-ranges forces "
+                         "--ranges ranges (default 8); wand-single forces "
+                         "n_ranges=1 (one group per query, no merge); "
                          "prefix treats each qtext as a `pre*` wildcard "
                          "(dictionary-expanded, scoring_boolean rewrite); "
                          "phrase-prefix = ES match_phrase_prefix (exact "

@@ -533,6 +533,41 @@ def test_range_agg_empty_buckets_kept(spark, eidx):
     assert any(tot[q] > n_match[q] for q, _ in QUERIES)
 
 
+def test_range_agg_open_bucket_without_arrow_conversion(spark, eidx):
+    """Engine results must not depend on the session's Arrow setting:
+    with ``spark.sql.execution.arrow.pyspark.enabled=false`` the open
+    ``*-40`` bucket (NULL lower bound) still counts every matched doc
+    with dl < 40 — a pandas-built ranges frame would turn that NULL
+    into NaN and count nothing."""
+    from aarhus_spark.harness import RANGE_SPEC
+    from aarhus_spark.operators.build import read_doclens
+    from aarhus_spark.operators.eslayer import search_range_agg
+    out, _, _, _ = eidx
+    qdf = spark.createDataFrame(QUERIES, "query_id long, qtext string")
+
+    def counts():
+        return sorted(tuple(r) for r in
+                      search_range_agg(spark, out, qdf, RANGE_SPEC).collect())
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        arrow_on = counts()
+        spark.conf.set(conf, "false")
+        arrow_off = counts()
+    finally:
+        spark.conf.set(conf, prev)
+    assert arrow_off == arrow_on
+    m = (search_matches(spark, out, qdf).toPandas()
+         .merge(read_doclens(spark, out).select("docid", "dl").toPandas(),
+                on="docid"))
+    short = m[m["dl"] < 40].groupby("query_id").size()
+    got = {q: c for q, b, c, _ in arrow_off if b == "*-40"}
+    assert got == {qid: int(short.get(qid, 0)) for qid, _ in QUERIES}
+    assert sum(got.values()) > 0
+
+
 def test_filters_agg_vs_python_twin(spark, eidx):
     from aarhus_spark.operators.eslayer import search_filters_agg
     out, oidx, _, _ = eidx

@@ -237,98 +237,3 @@ def test_fuzzy_search_equals_expanded_disjunction(spark, sf_dir):
         "query_id long, qtext string"), k=15).collect()
     key = lambda r: (r["query_id"], r["rank"], r["docid"], r["score"])
     assert sorted(map(key, got)) == sorted(map(key, want))
-
-
-# ---------------------------------------------------------------------------
-# pruned (threshold-algorithm) multi_match ≡ exhaustive combiner
-# ---------------------------------------------------------------------------
-
-@pytest.mark.parametrize("mode,tie,boost,k", [
-    ("best_fields", 0.0, 1.0, 2),
-    ("best_fields", 0.3, 3.0, 2),
-    ("best_fields", 1.0, 1.0, 100),
-    ("most_fields", 0.0, 2.0, 3),
-    ("most_fields", 0.0, 1.0, 100),
-])
-def test_multi_match_pruned_equals_exhaustive(spark, mf_index, mode, tie,
-                                              boost, k):
-    """The Fagin-style pruned combiner must return BIT-identical rows to
-    the exhaustive fold — same docids, same ranks, same float64 scores —
-    for every mode/tie_breaker/boost/k combination (small k forces the
-    threshold check; k=100 exhausts every field)."""
-    from aarhus_spark.operators.multifield import search_multi_match
-    out, _ = mf_index
-    qdf = spark.createDataFrame(
-        [(0, "apple"), (1, "banana cherry"), (2, "durian"),
-         (3, "zzzznomatch")],
-        "query_id long, qtext string")
-    kw = dict(k=k, boosts={"title": boost}, mode=mode, tie_breaker=tie)
-    ex = search_multi_match(spark, out, qdf, prune=False, **kw).collect()
-    pr = search_multi_match(spark, out, qdf, prune=True, **kw).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    ex_m = {key(r): (r["docid"], r["score"]) for r in ex}
-    pr_m = {key(r): (r["docid"], r["score"]) for r in pr}
-    assert ex_m == pr_m     # exact equality incl. float64 bit value
-
-
-def test_multi_match_pruned_escalates(spark, mf_index):
-    """k' escalation path: with k equal to the full match count the
-    first round can't prove the bound for every query, so the loop must
-    escalate and still terminate with the exhaustive answer."""
-    from aarhus_spark.operators.multifield import search_multi_match
-    out, _ = mf_index
-    qdf = spark.createDataFrame([(0, "apple banana cherry")],
-                                "query_id long, qtext string")
-    ex = search_multi_match(spark, out, qdf, k=5, prune=False,
-                            mode="most_fields").collect()
-    pr = search_multi_match(spark, out, qdf, k=5, prune=True,
-                            mode="most_fields").collect()
-    assert sorted(map(tuple, ex)) == sorted(map(tuple, pr))
-
-
-@pytest.fixture(scope="module")
-def mf_tie_index(spark, tmpdir_session):
-    """Tie-heavy fixture: 40 docs share an IDENTICAL title ("apple
-    pie", same tf/dl → one score class) — the shape that defeats a
-    naive Fagin threshold (τ never drops below the tie value), so the
-    pruned combiner's tie-aware acceptance is what terminates."""
-    from aarhus_spark.operators.multifield import build_field_indexes
-    rows = []
-    for i in range(40):
-        rows.append((f"u://tie{i:02d}", "apple pie",
-                     f"banana cherry text{i} apple" if i % 3 == 0
-                     else f"durian text{i}"))
-    for i in range(15):
-        rows.append((f"u://var{i:02d}", f"cherry title{i}",
-                     f"apple banana cherry word{i}"))
-    pdf = pd.DataFrame(rows, columns=["url", "title", "text"])
-    pdf["warc_ts"] = pd.to_datetime("2026-01-01")
-    df = (spark.createDataFrame(pdf)
-          .withColumn("html", F.lit(None).cast("binary"))
-          .withColumn("lang", F.lit("en"))
-          .select("url", "warc_ts", "html", "text", "lang", "title"))
-    out = os.path.join(tmpdir_session, "mf_tie_idx")
-    build_field_indexes(spark, df, out,
-                        fields={"text": F.col("text"),
-                                "title": F.col("title")})
-    return out
-
-
-@pytest.mark.parametrize("mode,tie,boost,k", [
-    ("best_fields", 0.0, 2.0, 5),
-    ("best_fields", 0.0, 1.0, 3),
-    ("best_fields", 0.4, 2.0, 5),
-    ("most_fields", 0.0, 2.0, 5),
-])
-def test_multi_match_pruned_tie_heavy(spark, mf_tie_index, mode, tie,
-                                      boost, k):
-    from aarhus_spark.operators.multifield import search_multi_match
-    qdf = spark.createDataFrame(
-        [(0, "apple"), (1, "apple pie"), (2, "cherry")],
-        "query_id long, qtext string")
-    kw = dict(k=k, boosts={"title": boost}, mode=mode, tie_breaker=tie)
-    ex = search_multi_match(spark, mf_tie_index, qdf, prune=False, **kw).collect()
-    pr = search_multi_match(spark, mf_tie_index, qdf, prune=True, **kw).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert ({key(r): (r["docid"], r["score"]) for r in ex}
-            == {key(r): (r["docid"], r["score"]) for r in pr})

@@ -4,6 +4,7 @@ scan, the dictionary join broadcasts, and no row-at-a-time Python UDF
 (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)."""
 
 import os
+import re
 
 import pytest
 
@@ -79,25 +80,6 @@ def test_query_analysis_no_row_python(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_range_join_carries_both_span_bounds(spark, tmpdir_session, pages_parquet):
-    """The chunk-parallel (query, range) join must prune on BOTH ends of
-    a row's docid span: __max_docid >= lo AND first_docid <= hi. With
-    only the low predicate, a late-docid tail row replicates into every
-    earlier range's group (~n_ranges/2 copies at scale)."""
-    from aarhus_spark.operators.build import build_index
-    from aarhus_spark.operators.search import search_wand_ranges
-    idx = os.path.join(tmpdir_session, "idx_plan2")
-    if not os.path.exists(os.path.join(idx, "stats.json")):
-        build_index(spark, read_pages(spark, pages_parquet), idx,
-                    n_partitions=3, n_buckets=2, salts=2)
-    qdf = spark.createDataFrame([(0, "the spark data")], "query_id long, qtext string")
-    plan = _plan(search_wand_ranges(spark, idx, qdf, n_ranges=4))
-    flat = plan.replace(" ", "")
-    assert "__max_docid" in flat and "first_docid" in flat
-    assert ">=lo" in flat.replace("'", "") or "(__max_docid>=lo)" in flat
-    assert "<=hi" in flat.replace("'", "") or "(first_docid<=hi)" in flat
-
-
 def test_near_dup_topn_has_no_unpartitioned_window_over_pairs(spark, sf_dir):
     """The near-dup top-N must not funnel the full candidate-pair set
     through one task: the first window is partitioned (per-group top-N);
@@ -115,24 +97,63 @@ def test_near_dup_topn_has_no_unpartitioned_window_over_pairs(spark, sf_dir):
     assert "pmod" in plan
 
 
-def test_phrase_range_join_prunes_and_stays_arrow(spark, tmpdir_session, pages_parquet):
-    """Q8: the phrase chunk-parallel path must reuse the pruned range
-    join ([first_docid, __max_docid] span intersect) and stay on the
-    Arrow path (no row-Python)."""
+def _fan_out_ops():
+    """One op per kernel family on the shared per-query fan-out:
+    name -> (query text, fn(spark, idx, qdf, n_ranges))."""
+    from aarhus_spark.operators.search import (search_phrase,
+                                               search_phrase_prefix,
+                                               search_topk)
+    from aarhus_spark.operators.spans import search_span_near
+    return {
+        "wand": ("the spark data", lambda s, i, q, n: search_topk(
+            s, i, q, n_ranges=n)),
+        "phrase": ("the spark", lambda s, i, q, n: search_phrase(
+            s, i, q, n_ranges=n)),
+        "phrase_prefix": ("the spa", lambda s, i, q, n: search_phrase_prefix(
+            s, i, q, n_ranges=n)),
+        "span_near": ("the spark", lambda s, i, q, n: search_span_near(
+            s, i, q, slop=3, n_ranges=n)),
+    }
+
+
+def _fan_out_plan(spark, tmpdir_session, pages_parquet, op, n_ranges):
     from aarhus_spark.operators.build import build_index
-    from aarhus_spark.operators.search import search_phrase
     idx = os.path.join(tmpdir_session, "idx_plan2")
     if not os.path.exists(os.path.join(idx, "stats.json")):
-        from aarhus_spark.sources.io import read_pages as _rp
-        build_index(spark, _rp(spark, pages_parquet), idx,
+        build_index(spark, read_pages(spark, pages_parquet), idx,
                     n_partitions=3, n_buckets=2, salts=2)
-    qdf = spark.createDataFrame([(0, "the spark")], "query_id long, qtext string")
-    plan = _plan(search_phrase(spark, idx, qdf, n_ranges=4))
-    flat = plan.replace(" ", "")
-    assert "__max_docid" in flat and "first_docid" in flat
+    qtext, fn = _fan_out_ops()[op]
+    qdf = spark.createDataFrame([(0, qtext)], "query_id long, qtext string")
+    return _plan(fn(spark, idx, qdf, n_ranges))
+
+
+@pytest.mark.parametrize("op", ["wand", "phrase", "phrase_prefix", "span_near"])
+def test_range_join_carries_both_span_bounds(spark, tmpdir_session,
+                                             pages_parquet, op):
+    """Every kernel's chunk-parallel (query, range) join must prune on
+    BOTH ends of a row's docid span: __max_docid >= lo AND first_docid
+    <= hi. With only the low predicate, a late-docid tail row
+    replicates into every earlier range's group (~n_ranges/2 copies at
+    scale). The path stays on Arrow (no row-Python) and keeps the
+    term-IN scan pushdown."""
+    plan = _fan_out_plan(spark, tmpdir_session, pages_parquet, op, 4)
+    flat = re.sub(r"#\d+L?", "", plan).replace(" ", "")
+    assert "(__max_docid>=lo)AND(first_docid<=hi)" in flat
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
     assert "PushedFilters" in plan and "In(term" in plan
+
+
+@pytest.mark.parametrize("op", ["wand", "phrase", "phrase_prefix", "span_near"])
+def test_single_range_plan_has_no_merge(spark, tmpdir_session,
+                                        pages_parquet, op):
+    """One range (every small index) is one applyInPandas group per
+    query: no range join, no rng grouping key, no merge window."""
+    plan = _fan_out_plan(spark, tmpdir_session, pages_parquet, op, 1)
+    assert "FlatMapGroupsInPandas" in plan
+    assert "Window" not in plan
+    assert "__max_docid" not in plan
+    assert "rng" not in plan
 
 
 def test_percolate_zero_shuffles(spark, pages_parquet):

@@ -4,10 +4,11 @@ The round-8 changes are performance-only; these tests pin that each
 rewritten internal is value-identical to the straightforward path it
 replaced:
 
-1. ``local_df`` — Arrow-LocalRelation construction of small driver
-   frames — matches ``createDataFrame(list, schema)`` row-for-row for
-   every schema shape the operators feed it (ints, strings, nullable
-   doubles, array<string>, empty input).
+1. ``local_df`` — LocalRelation construction of small driver frames
+   from a pyarrow table — matches ``createDataFrame(list, schema)``
+   row-for-row for every schema shape the operators feed it (ints,
+   strings, nullable doubles, array<string>, empty input), and stays a
+   LocalRelation with Arrow conversion off.
 2. ``localize_queries`` passes an already-local frame through untouched
    and reproduces an RDD-backed frame's rows and schema exactly.
 3. ``minhash_lsh_dedup``'s fused single-action pipeline equals the
@@ -48,10 +49,19 @@ def test_local_df_matches_list_path(spark, rows, schema):
 
 
 def test_local_df_is_job_free_local_relation(spark):
+    """A LocalRelation whatever the session's Arrow setting — with
+    Arrow conversion off a pandas-built frame falls back to an RDD."""
     from aarhus_spark.operators.search import local_df
-    df = local_df(spark, [(1, "a")], "query_id long, term string")
-    plan = df._jdf.queryExecution().optimizedPlan()
-    assert plan.getClass().getSimpleName() == "LocalRelation"
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            df = local_df(spark, [(1, "a")], "query_id long, term string")
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation", arrow
+    finally:
+        spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
